@@ -244,7 +244,6 @@ def stream_table_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -285,7 +284,6 @@ def stream_table_source_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import stream_table_jvm
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -419,7 +417,6 @@ def stream_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 
@@ -556,7 +553,6 @@ def stream_starting_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     from delta_lake_play_spark.sources.table_stream import VersionedTableDataSource
     from delta_lake_play_spark.table.versioned import (
         VersionedTable,
-        empty_df,
         temp_table_path,
     )
 

@@ -16,6 +16,11 @@ observed flaws:
   Python tuple (renders ``id IN (7,)`` for single ids; injectable) —
   here it's a parameterized ``Column.isin``.
 
+Per-request fixed cost stays off the Python workers: the seed and
+MERGE rows cross into Spark as Arrow local relations
+(``table.versioned.local_df``), and ``get_table`` sorts its rows in
+the driver after the one collect job.
+
 The handler layer is framework-free so it is testable in this
 environment (FastAPI is not installed); the semantics, request and
 response shapes are the reference's.
@@ -32,7 +37,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from delta_lake_play_spark.table.versioned import VersionedTable
+from delta_lake_play_spark.table.versioned import VersionedTable, local_df
 
 # The reference's fixed schema and seed rows (spark_project.py:29-35).
 NAMES_SCHEMA = T.StructType(
@@ -67,7 +72,7 @@ class NamesTableService:
         reference, whose delta-spark writes the Delta log under every
         endpoint DML (``spark_project.py:36`` + ``api.py:91-107``)."""
         self.spark = spark
-        seed = spark.createDataFrame(SEED_ROWS, NAMES_SCHEMA)
+        seed = local_df(spark, SEED_ROWS, NAMES_SCHEMA)
         self.table = VersionedTable.create_if_absent(
             spark, table_dir, seed, delta_mirror=delta_mirror
         )
@@ -81,8 +86,9 @@ class NamesTableService:
     # ------------------------------------------- GET /get_table_history
 
     def get_table_history(self) -> dict[str, Any]:
-        """``api.py:60-67``: history DataFrame → pandas → JSON keyed by
-        version, timestamps rendered as strings."""
+        """``api.py:60-67``: history DataFrame (a local relation built
+        from the commit log) → pandas → JSON keyed by version,
+        timestamps rendered as strings."""
         df = self.table.history().toPandas()
         df["timestamp"] = df["timestamp"].astype(str)
         return json.loads(df.set_index("version").to_json())
@@ -93,15 +99,20 @@ class NamesTableService:
         """``api.py:69-86``: dispatch None/int/datetime → latest /
         versionAsOf / timestampAsOf, return records + version label."""
         if version is None:
-            sdf = self.table.to_df()
+            # One log listing picks the version, so the label always
+            # names the snapshot served even if a commit lands between.
             label: Any = self.table.latest_version()
+            sdf = self.table.read(version=label)
         elif isinstance(version, int):
             sdf = self.table.read(version=version)
             label = version
         else:
             sdf = self.table.read(timestamp=version)
             label = version
-        data = sdf.orderBy("id").toPandas().to_dict(orient="records")
+        # The response holds every row in the driver anyway: sorting
+        # there skips Spark's range-partition sample job and shuffle.
+        pdf = sdf.toPandas().sort_values("id", kind="stable", ignore_index=True)
+        data = pdf.to_dict(orient="records")
         return {"version": label, "data": data}
 
     # ---------------------------------------------- PUT /merge_to_table
@@ -110,8 +121,10 @@ class NamesTableService:
         """``api.py:88-102``: MERGE on id — update matched names,
         insert unmatched."""
         records = [r if isinstance(r, TableRow) else TableRow(**r) for r in rows]
-        source = self.spark.createDataFrame(
-            [(r.id, r.firstname, r.lastname) for r in records], NAMES_SCHEMA
+        source = local_df(
+            self.spark,
+            [(r.id, r.firstname, r.lastname) for r in records],
+            NAMES_SCHEMA,
         )
         new_version = self.table.merge(source, key="id")
         return {"version": new_version}

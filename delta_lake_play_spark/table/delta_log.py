@@ -715,6 +715,8 @@ def _ensure_materialized(table, entry: dict) -> None:
     positions, and write survivors partitioned by fingerprint — no
     per-row or per-file driver work, and output directories are
     atomically renamed into place so concurrent syncs race benignly."""
+    from .versioned import local_df
+
     dv_files = [f for f in entry["files"] if _has_dv(f)]
     pending = {
         _dv_fingerprint(f): f
@@ -737,7 +739,8 @@ def _ensure_materialized(table, entry: dict) -> None:
     )
     dv_df = table._dv_df(files)
     kept = src.join(dv_df, ["__path", "__row_idx"], "left_anti")
-    fp_map = table.spark.createDataFrame(
+    fp_map = local_df(
+        table.spark,
         [(table._abs(f["path"]), fp) for fp, f in pending.items()],
         "__path string, __fp string",
     )
@@ -2519,6 +2522,7 @@ def read_delta_snapshot(
     # O(total deleted rows); a cluster-scale reader would decode
     # distributedly (mapInPandas over the DV specs), same join.
     from .dv_codec import read_dv_spec
+    from .versioned import local_df
 
     dv_rows: list[tuple[str, int]] = []
     for p, a in adds.items():
@@ -2532,7 +2536,7 @@ def read_delta_snapshot(
     def _read(paths: list[str]) -> DataFrame:
         df = spark.read.schema(data_schema).parquet(*paths)
         if dv_rows:
-            mask = spark.createDataFrame(dv_rows, "__fn string, __ri long")
+            mask = local_df(spark, dv_rows, "__fn string, __ri long")
             df = (
                 df.withColumn("__fn", F.col("_metadata.file_name"))
                 .withColumn("__ri", F.col("_metadata.row_index"))

@@ -67,9 +67,12 @@ from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 from urllib.parse import unquote
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -584,7 +587,8 @@ class VersionedTable:
         entries = [
             self._read_log_raw(v) for v in sorted(self._versions(), reverse=True)
         ]
-        return self.spark.createDataFrame(
+        return local_df(
+            self.spark,
             [
                 (
                     e["version"],
@@ -1163,7 +1167,8 @@ class VersionedTable:
                 )
             # Translate scan paths (absolute) back to the logged path
             # strings — an O(#files) broadcast map, not a collect.
-            map_df = self.spark.createDataFrame(
+            map_df = local_df(
+                self.spark,
                 [(self._abs(f["path"]), f["path"]) for f in files],
                 "__path string, path string",
             )
@@ -1279,7 +1284,8 @@ class VersionedTable:
                 matched = matched.join(
                     existing, ["__path", "__row_idx"], "left_anti"
                 )
-            map_df = self.spark.createDataFrame(
+            map_df = local_df(
+                self.spark,
                 [(self._abs(f["path"]), f["path"]) for f in files],
                 "__path string, path string",
             )
@@ -1959,7 +1965,8 @@ class VersionedTable:
             )
             for f in entry["files"]
         ]
-        return self.spark.createDataFrame(
+        return local_df(
+            self.spark,
             rows,
             "path string, num_rows long, dv_masked long, "
             "stats string, null_counts string",
@@ -2149,7 +2156,7 @@ class VersionedTable:
                         f["path"].replace(os.sep, "/"), part_cols
                     )
                     rows.append((i, *[pv.get(c) for c in part_cols]))
-                typed = self.spark.createDataFrame(rows, pschema).select(
+                typed = local_df(self.spark, rows, pschema).select(
                     "__idx",
                     *[F.col(c).cast(by_name[c]).alias(c) for c in part_cols],
                 )
@@ -2912,7 +2919,7 @@ class VersionedTable:
         ``(__path, __row_idx)`` DataFrame (absolute paths), or None
         when nothing is masked. Sidecars are read distributedly by
         Spark; only pre-sidecar inline lists (legacy entries) go
-        through ``createDataFrame``. Sidecar rows for files outside
+        through ``local_df``. Sidecar rows for files outside
         ``file_entries`` are filtered out by the path-map join, so
         partial reads (stats-pruned scans, change feeds) stay exact."""
         legacy_rows = [
@@ -2925,7 +2932,8 @@ class VersionedTable:
             return None
         out = None
         if sidecars:
-            map_df = self.spark.createDataFrame(
+            map_df = local_df(
+                self.spark,
                 [(f["path"], self._abs(f["path"])) for f in file_entries],
                 "path string, __path string",
             ).dropDuplicates(["path"])
@@ -2934,8 +2942,8 @@ class VersionedTable:
                 "__path", F.col("pos").alias("__row_idx")
             )
         if legacy_rows:
-            ldf = self.spark.createDataFrame(
-                legacy_rows, "__path string, __row_idx long"
+            ldf = local_df(
+                self.spark, legacy_rows, "__path string, __row_idx long"
             )
             out = ldf if out is None else out.unionByName(ldf)
         return out
@@ -3706,6 +3714,37 @@ def empty_df(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
     )
     cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in s.fields]
     return spark.range(1).select(*cols).where(F.lit(False))
+
+
+def local_df(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in schema field
+    order) that OPTIMIZES to a LocalRelation: the rows cross into the
+    JVM once as an Arrow table and every later evaluation runs without
+    a Python worker. ``createDataFrame(list, schema)`` instead
+    parallelizes pickled rows and re-serializes them through Python
+    tasks on each evaluation.
+
+    Rows are checked first with the verifier ``createDataFrame`` uses
+    for lists (type, ``IntegerType`` range, null in a non-nullable
+    field): pyarrow's own conversion would silently truncate
+    ``1.5`` to an int32 ``1`` and ignores nullability."""
+    s = (
+        schema
+        if isinstance(schema, T.StructType)
+        else T._parse_datatype_string(schema)
+    )
+    verify = _make_type_verifier(s)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(s)
+    columns = list(zip(*rows)) if rows else [()] * len(s.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, s)
 
 
 def _is_empty_local(df: DataFrame) -> bool:

@@ -282,3 +282,146 @@ def test_pydantic_request_models_validate_wire_shapes(spark):
         assert status == 200 and got["version"] == 1
     finally:
         server.shutdown()
+
+
+# ------------------------- label race, row checks -------------------------
+
+
+def test_latest_read_label_matches_rows_under_concurrent_commit(spark):
+    """``get_table(None)`` resolves the version once: a commit landing
+    between picking the snapshot and reading it must not label the
+    old snapshot's rows with the new version."""
+    from delta_lake_play_spark.table.versioned import VersionedTable
+
+    svc = NamesTableService(spark, temp_table_path("serving-race"))
+    other = VersionedTable(spark, svc.table.path)
+    read = svc.table.read
+
+    def read_then_commit(*args, **kwargs):
+        df = read(*args, **kwargs)
+        if other.latest_version() == 0:
+            other.delete("id = 2")
+        return df
+
+    svc.table.read = read_then_commit
+    resp = svc.get_table()
+    assert other.latest_version() == 1  # the commit did land mid-request
+    assert resp["version"] == 0
+    assert _names(resp) == {
+        (1, "James", "Bond"), (2, "Alice", "Rogers"), (3, "Joe", "Bloggs")
+    }
+
+
+BAD_ROWS = [
+    {"id": 1.5, "firstname": "A", "lastname": "B"},
+    {"id": 2**31, "firstname": "A", "lastname": "B"},
+    {"id": "x", "firstname": "A", "lastname": "B"},
+    {"id": 7, "firstname": None, "lastname": "B"},
+]
+
+
+@pytest.mark.parametrize("row", BAD_ROWS, ids=["float", "int32_overflow", "str", "null"])
+def test_merge_rejects_bad_rows_before_commit(service, row):
+    """Driver rows are type-checked before they become a DataFrame, so
+    a bad MERGE row fails in the request and commits nothing."""
+    with pytest.raises((ValueError, TypeError)):
+        service.merge_to_table([row])
+    assert service.table.latest_version() == 0
+
+
+def test_http_merge_rejects_bad_rows_with_422(spark):
+    import json
+    import urllib.request
+
+    from delta_lake_play_spark.serving.http_server import start_server
+
+    server, _thread = start_server(spark, temp_table_path("serving-bad"))
+    port = server.server_address[1]
+
+    def put(rows):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/merge_to_table",
+            data=json.dumps({"data": rows}).encode(),
+            method="PUT",
+            headers={"Content-Type": "application/json"},
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=60) as resp:
+                return resp.status
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    try:
+        for row in BAD_ROWS:
+            assert put([row]) == 422, row
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/get_table", data=b"{}", method="POST",
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            assert json.loads(resp.read())["version"] == 0
+    finally:
+        server.shutdown()
+
+
+def test_local_df_empty_is_empty_local_relation(spark):
+    from delta_lake_play_spark.serving.handlers import NAMES_SCHEMA
+    from delta_lake_play_spark.table.versioned import _is_empty_local, local_df
+
+    df = local_df(spark, [], NAMES_SCHEMA)
+    assert _is_empty_local(df)
+    assert df.schema == NAMES_SCHEMA
+
+
+# ---------------------------- Spark jobs per request ----------------------------
+
+
+def _jobs(spark, fn):
+    """(result, number of Spark jobs ``fn`` ran) — counted through a
+    job group once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"serving-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serving job count")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _optimized_class(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+def test_serving_job_counts(spark):
+    """Job counts repeat exactly from run to run, so they pin the
+    per-request path: a read is its one collect job (the sort runs in
+    the driver), history is metadata served from a local relation,
+    and a MERGE source never goes through Python workers."""
+    svc = NamesTableService(
+        spark, temp_table_path("serving-jobs"), delta_mirror=True
+    )
+    sources = []
+    merge = svc.table.merge
+
+    def capture(source, *args, **kwargs):
+        sources.append(source)
+        return merge(source, *args, **kwargs)
+
+    svc.table.merge = capture
+    rows = [TableRow(i, f"F{i}", f"L{i}") for i in range(1, 21)]
+    for _ in range(2):  # the second pass is warm
+        resp, n_merge = _jobs(spark, lambda: svc.merge_to_table(rows))
+        assert n_merge <= 9
+        _, n_read = _jobs(spark, svc.get_table)
+        assert n_read == 1
+        _, n_version = _jobs(spark, lambda: svc.get_table(version=0))
+        assert n_version == 1
+        _, n_hist = _jobs(spark, svc.get_table_history)
+        assert n_hist <= 1
+    assert resp["version"] == 2
+    assert _optimized_class(svc.table.history()) == "LocalRelation"
+    assert _optimized_class(sources[0]) == "LocalRelation"
